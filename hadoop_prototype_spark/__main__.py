@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,10 +126,14 @@ def cmd_terasort(spark, a) -> dict:
 
 def cmd_teravalidate(spark, a) -> dict:
     # EX/terasort/TeraValidate.java:53 — global sortedness + checksum.
-    # Distributed, never a single-partition window: within-partition order
-    # via a pid-partitioned lag window, cross-partition order via the tiny
-    # per-partition (first,last) boundary list collected to the driver —
-    # TeraValidate's own design (one mapper per file + boundary records).
+    # Distributed, never a single-partition window: order within each
+    # input file split via a lag window over the split's rows in read
+    # order, order across splits via the tiny per-split (lo, hi) boundary
+    # list collected to the driver and ordered by (part-file name, split
+    # offset) — TeraValidate's own design (one mapper per file + boundary
+    # records). A split, not a read partition, is the unit: a read packs
+    # several files (or pieces of one) into a partition by size, so
+    # partition order need not be name order.
     from pyspark.sql.window import Window
 
     from .sources.generators import record_checksum
@@ -136,21 +141,22 @@ def cmd_teravalidate(spark, a) -> dict:
     df = spark.read.parquet(a.input)
     keyed = df.select(
         "key",
-        F.spark_partition_id().alias("_pid"),
+        F.input_file_name().alias("_file"),
+        F.input_file_block_start().alias("_start"),
         F.monotonically_increasing_id().alias("_mid"),
     )
-    w = Window.partitionBy("_pid").orderBy("_mid")
+    w = Window.partitionBy("_file", "_start").orderBy("_mid")
     violations = (
         keyed.withColumn("_prev", F.lag("key").over(w))
         .filter(F.col("_prev") > F.col("key"))
         .count()
     )
-    bounds = (
-        keyed.groupBy("_pid")
+    splits = (
+        keyed.groupBy("_file", "_start")
         .agg(F.min("key").alias("lo"), F.max("key").alias("hi"))
-        .orderBy("_pid")
         .collect()
     )
+    bounds = sorted(splits, key=lambda r: (os.path.basename(r._file), r._start))
     boundary_ok = all(
         bounds[i].hi <= bounds[i + 1].lo for i in range(len(bounds) - 1)
     )

@@ -1815,6 +1815,50 @@ def last_txn_batch(path: str, app: str) -> int | None:
     return best
 
 
+def _rereadable(leaf) -> bool:
+    """Whether a second evaluation of a plan leaf reads the same rows
+    back without a Python worker: a file scan, rows the plan carries, or
+    an already checkpointed RDD — which is what materialize_source
+    returns, so the call is idempotent. A JDBC relation or a Python RDD
+    is not: the rows can change, and the RDD runs in Python workers."""
+    name = leaf.getClass().getSimpleName()
+    if name == "LogicalRelation":
+        return leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    if name == "LogicalRDD":
+        rdd = leaf.rdd()
+        return rdd.isLocallyCheckpointed() or rdd.isCheckpointed()
+    return name in ("LocalRelation", "Range")
+
+
+def materialize_source(df: DataFrame | None) -> DataFrame | None:
+    """A write verb's source, evaluated once however many jobs read it.
+
+    Merge and delete read their source in more than one job: the
+    affected-file probe, then the staging or deletion-vector write, and
+    all of it again on each OCC retry. A source whose plan is
+    non-deterministic, or that reads a Python RDD (``createDataFrame``
+    of a list), would run again each time: in Python workers, and maybe
+    to different rows, so the probe and the write could disagree. Such a
+    source is wrapped in a lazy ``localCheckpoint``: the first job that
+    reads it stores its partitions, later jobs read them back, and no
+    Spark job is added. This is Delta's MERGE source materialization
+    (``materializeSource=auto``).
+
+    A deterministic plan whose leaves are all file scans or local rows
+    comes back unchanged, so a table-sized scan is never copied; so does
+    a frame this function returned before. ``None`` passes through, for
+    optional key frames."""
+    if df is None:
+        return None
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    if plan.deterministic() and all(
+        _rereadable(leaves.apply(i)) for i in range(leaves.size())
+    ):
+        return df
+    return df.localCheckpoint(eager=False)
+
+
 def merge_into(
     spark: SparkSession, path: str, updates: DataFrame, key_col: str,
     txn: dict | None = None, merge_schema: bool = False,
@@ -1845,7 +1889,14 @@ def merge_into(
     the upsert applies — the single-commit form a conditional MERGE with
     a WHEN … THEN DELETE clause needs (update keys and delete keys are
     disjoint there by first-match semantics). Pruning covers the union
-    of both key sets, so the rewrite stays O(affected files)."""
+    of both key sets, so the rewrite stays O(affected files).
+
+    ``updates`` and ``delete_keys`` are evaluated once (materialize_source):
+    the probe job fills them and the staging write reads them back, so
+    both see the same rows, and the verb starts no Python worker beyond
+    what the source itself needs."""
+    updates = materialize_source(updates)
+    delete_keys = materialize_source(delete_keys)
     base = _read_entry(path, current_version(path))
     if base["key_col"] != key_col:
         raise ValueError(f"table is keyed on {base['key_col']!r}, not {key_col!r}")
@@ -1921,9 +1972,9 @@ def merge_into(
 def delete_from(
     spark: SparkSession, path: str, delete_keys: DataFrame, key_col: str
 ) -> dict:
-    """Versioned CoW delete (same pruning; left-anti rewrite)."""
-    from pyspark.sql import functions as F
-
+    """Versioned CoW delete (same pruning; left-anti rewrite). Like
+    merge_into, it evaluates ``delete_keys`` once."""
+    delete_keys = materialize_source(delete_keys)
     base = _read_entry(path, current_version(path))
     if base["key_col"] != key_col:
         raise ValueError(f"table is keyed on {base['key_col']!r}, not {key_col!r}")
@@ -1983,7 +2034,12 @@ def delete_from_mor(
     compaction. ``vacuum`` sweeps vector files exactly like data files
     (reference-counted against retained versions, era/age-gated).
 
+    ``delete_keys`` is evaluated once (materialize_source): the probe job
+    fills it and the vector write reads it back, so the recorded pairs are
+    the probed keys and the verb starts no Python worker of its own.
+
     Same accounting dict as delete_from, plus ``dv_files_added``."""
+    delete_keys = materialize_source(delete_keys)
     base = _read_entry(path, current_version(path))
     if base["key_col"] != key_col:
         raise ValueError(f"table is keyed on {base['key_col']!r}, not {key_col!r}")
@@ -2127,7 +2183,9 @@ def delete_from_mor_retrying(
     txn: dict | None = None,
 ) -> dict:
     """delete_from_mor with the optimistic-concurrency retry loop (and the
-    txn replay-skip, for at-least-once callers)."""
+    txn replay-skip, for at-least-once callers). Every attempt deletes the
+    same keys: the source is materialized once, before the loop."""
+    delete_keys = materialize_source(delete_keys)
 
     def attempt() -> dict:
         if txn is not None:
@@ -2470,7 +2528,10 @@ def merge_into_retrying(
     row-wise, so any serialization order yields the same final table when
     writers touch disjoint keys, and last-writer-wins per key otherwise.
     With ``txn``, a retry that discovers the marker already committed (a
-    replayed twin won) skips instead of double-applying."""
+    replayed twin won) skips instead of double-applying. The source is
+    materialized once, before the loop, so every attempt upserts the
+    same rows."""
+    updates = materialize_source(updates)
 
     def attempt() -> dict:
         if txn is not None:
@@ -2498,7 +2559,9 @@ def delete_from_retrying(
     key_col: str,
     max_retries: int = 10,
 ) -> dict:
-    """delete_from with the same optimistic-concurrency retry loop."""
+    """delete_from with the same optimistic-concurrency retry loop, over
+    keys materialized once before it."""
+    delete_keys = materialize_source(delete_keys)
     return _with_conflict_retry(
         lambda: delete_from(spark, path, delete_keys, key_col), max_retries
     )

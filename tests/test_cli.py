@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import glob
 import json
+import os
+import shutil
 import sys
 
 import pytest
@@ -94,6 +96,35 @@ def test_cli_terasort_pipeline(spark, tmp_path, capsys):
     v0 = run_cli(capsys, spark, "teravalidate", gen)
     assert v0["checksum"] == v["checksum"], "sort must conserve the checksum"
     assert v0["sorted"] is False, "unsorted input must fail validation"
+
+    # several part files of unequal size, read in splits smaller than a
+    # file: the read packs splits into partitions by size, so partition
+    # order is not part-file name order, and validation must not depend
+    # on it
+    multi = str(tmp_path / "sorted_multi")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        run_cli(capsys, spark, "terasort", gen, multi)
+    finally:
+        spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    parts = sorted(glob.glob(f"{multi}/part-*.parquet"))
+    assert len(parts) > 1
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
+    try:
+        assert spark.read.parquet(multi).rdd.getNumPartitions() > len(parts)
+        vm = run_cli(capsys, spark, "teravalidate", multi)
+        assert vm["sorted"] is True and vm["rows"] == 3000
+        assert vm["checksum"] == v["checksum"]
+        assert run_cli(capsys, spark, "teravalidate", gen)["sorted"] is False
+        # every file still sorted inside, but name order no longer key order
+        swapped = tmp_path / "swapped"
+        swapped.mkdir()
+        for src, dst in zip(parts, reversed(parts)):
+            shutil.copy(src, swapped / os.path.basename(dst))
+        vs = run_cli(capsys, spark, "teravalidate", str(swapped))
+        assert vs["violations"] == 0 and vs["sorted"] is False
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
 def test_cli_randomtextwriter_compressed(spark, tmp_path, capsys):
