@@ -290,7 +290,12 @@ def _file_entries(
     source column's footer [min, max] through the driver-side transform
     (free, and JSON-safe even when the source is a timestamp the log
     cannot carry raw); bucket transforms run one grouped min/max scan of
-    the new files (hash order is not derivable from footers)."""
+    the new files (hash order is not derivable from footers).
+
+    A file with no non-NULL value for a column (all NULL, or zero rows)
+    records the null range ``[None, None]`` for it: nothing to prune by,
+    but the key is present, so optimize counts the file as written
+    under the spec and does not migrate it again."""
     transforms = transforms or []
     if not stat_cols and not transforms:
         return [
@@ -312,14 +317,15 @@ def _file_entries(
             if c == key_col:
                 continue
             _, clo, chi, *_rest = by_src[c][i]
-            if clo is not None:
-                st[c] = [clo, chi]
+            st[c] = [clo, chi]
         for sk, it, c in transforms:
             if not it.order_preserving:
                 continue
             _, clo, chi, *_rest = by_src[c][i]
-            if clo is not None:
-                st[sk] = [it.transform_py(clo), it.transform_py(chi)]
+            st[sk] = (
+                [None, None] if clo is None
+                else [it.transform_py(clo), it.transform_py(chi)]
+            )
         if st:
             fe["stats"] = st
         out.append(fe)
@@ -341,13 +347,13 @@ def _file_entries(
             )
             by_name = {os.path.basename(r["_f"]): r for r in rows}
             for fe in out:
-                r = by_name.get(fe["name"])
-                if r is None:
-                    continue  # zero-row file: no group, nothing to prune
+                r = by_name.get(fe["name"])  # None: zero-row file
                 st = fe.setdefault("stats", {})
                 for j, (sk, it, c) in enumerate(buckets):
-                    if r[f"_lo{j}"] is not None:
-                        st[sk] = [r[f"_lo{j}"], r[f"_hi{j}"]]
+                    st[sk] = (
+                        [None, None] if r is None
+                        else [r[f"_lo{j}"], r[f"_hi{j}"]]
+                    )
     return out
 
 
@@ -679,11 +685,15 @@ def read_table_pruned(
 
     def _keep(fe: dict) -> bool:
         if c == key:
-            return not (fe["max"] < lo or fe["min"] > hi)
-        st = fe.get("stats", {}).get(pc)
-        if st is None:
-            return True  # no recorded range: cannot prove it misses
-        return not (st[1] < lo or st[0] > hi)
+            flo, fhi = fe["min"], fe["max"]
+        else:
+            st = fe.get("stats", {}).get(pc)
+            if st is None:
+                return True  # no recorded range: cannot prove it misses
+            flo, fhi = st
+        if flo is None:
+            return True
+        return not (fhi < lo or flo > hi)
 
     names = [e["name"] for e in entry["files"] if _keep(e)]
     if not names:
@@ -2596,11 +2606,18 @@ def optimize(
     (the old files stay until vacuum); a concurrent merge/delete losing
     the version race retries exactly like any other writer.
 
-    Defaults: target = max(num_rows of current files) (compact up to the
-    table's organic file size), small = target // 2. Large files are
-    carried forward without being read or rewritten — at 100 TB the cost
-    is proportional to the small-file tail, not the table. Returns the
-    same accounting dict shape as merge/delete.
+    Defaults: target = max(LIVE rows of the files in scope) (compact up
+    to the table's organic file size), small = target // 2. Large files
+    are carried forward without being read or rewritten — at 100 TB the
+    cost is proportional to the small-file tail, not the table. Returns
+    the same accounting dict shape as merge/delete.
+
+    On a partitioned table, a file written before the CURRENT partition
+    spec (no recorded range for one of its entries) is rewritten once,
+    whatever its size and also under ``where=`` (it has no range to be
+    scoped out by): the eager migration ``set_partition_spec`` promises.
+    One such file is enough to commit; the rewrite clusters on the spec
+    and records its ranges, so a second optimize finds nothing to do.
 
     File sizes are LIVE rows (num_rows - ndel): a file hollowed out by
     merge-on-read deletes becomes a compaction victim once its live half
@@ -2646,20 +2663,31 @@ def optimize(
     sizes = [e["num_rows"] - e.get("ndel", 0) for e in candidates]
     target = max(sizes) if target_file_rows is None else int(target_file_rows)
     small = (max(1, target // 2)) if small_file_rows is None else int(small_file_rows)
+    idents, trans = _spec_stat_plan(base, base.get("partition_spec"))
+    spec_keys = [
+        k for k in [*idents, *(sk for sk, _, _ in trans)]
+        if k != _phys(base, base["key_col"])
+    ]
+
+    def must_rewrite(e: dict) -> bool:
+        # a vector to PURGE, or a file written before the current spec
+        # (no range for one of its entries): rewritten whatever its size
+        st = e.get("stats", {})
+        return bool(purge_dv and e.get("dv")) or any(
+            k not in st for k in spec_keys
+        )
+
     if zorder_by:
         victims = list(candidates)  # re-clustering rewrites the scope
     else:
         victims = [
             e
             for e in candidates
-            if e["num_rows"] - e.get("ndel", 0) < small
-            or (purge_dv and e.get("dv"))
+            if e["num_rows"] - e.get("ndel", 0) < small or must_rewrite(e)
         ]
-    if not zorder_by and len(victims) < 2 and not (
-        purge_dv and any(e.get("dv") for e in victims)
-    ):
+    if not zorder_by and len(victims) < 2 and not any(map(must_rewrite, victims)):
         # nothing to gain: compaction needs at least two small files
-        # (unless a PURGE has a vector to materialize)
+        # (unless one of them must be rewritten anyway)
         return {
             "version": base["version"],
             "files_rewritten": 0,

@@ -162,6 +162,49 @@ def test_spec_era_mixing_stays_exact(spark, tmp_path):
     assert kept2 <= 2
 
 
+@pytest.mark.parametrize("scoped", [False, True])
+def test_optimize_migrates_pre_spec_files_once(spark, tmp_path, scoped):
+    """OPTIMIZE migrates a file written before SET PARTITION SPEC whatever
+    its size (the pre-spec era is ONE 1200-row file, never 'small'), also
+    under where= (no range to scope it out); a post-spec file whose ts is
+    all NULL records the null range, so a second OPTIMIZE commits
+    nothing."""
+    path = str(tmp_path / "t")
+    ev = _events(spark)
+    sn.create_table(ev.filter("k < 1200").coalesce(1), path, "k")  # v1
+    pre = [fe["name"] for fe in sn._read_entry(path, 1)["files"]]
+    assert len(pre) == 1
+    sn.set_partition_spec(spark, path, ["days(ts)"])              # v2
+    sn.append_table(spark, path, ev.filter("k >= 1200 AND k < 1800"), "k")
+    sn.append_table(
+        spark, path,
+        spark.range(1800, 2400).selectExpr(
+            "id AS k", "CAST(NULL AS TIMESTAMP) AS ts",
+            "CAST(id % 100 AS INT) AS uid", "CAST(id * 1.5 AS DOUBLE) AS val",
+        ),
+        "k",
+    )                                                             # v4
+    e = sn._read_entry(path, 4)
+    null_files = [fe for fe in e["files"] if fe["name"].startswith("v4-")]
+    assert null_files
+    assert all(fe["stats"]["days(ts)"] == [None, None] for fe in null_files)
+    rows = sorted(sn.read_table(spark, path).collect())
+
+    day = tf.SpecItem.parse("days(ts)").transform_py(
+        dt.datetime.utcfromtimestamp(1700000000 + 1500 * 3600)
+    )
+    where = {"days(ts)": day} if scoped else None
+    rep = sn.optimize(spark, path, where=where)
+    assert rep["version"] == 5 and rep["files_rewritten"] >= 1
+    e = sn._read_entry(path, 5)
+    assert pre[0] not in {fe["name"] for fe in e["files"]}
+    assert all("days(ts)" in (fe.get("stats") or {}) for fe in e["files"])
+    assert sorted(sn.read_table(spark, path).collect()) == rows
+
+    again = sn.optimize(spark, path, where=where)
+    assert again["version"] == 5 and again["files_rewritten"] == 0
+
+
 def test_optimize_where_scopes_by_transform(spark, tmp_path):
     path = str(tmp_path / "t")
     sn.create_table(_events(spark), path, "k",

@@ -223,9 +223,12 @@ def test_stream_read_change_feed_matches_batch_cdc(spark, tmp_path):
     sn.delete_from_mor(
         spark, path, spark.range(5, 7).select(F.col("id").alias("k")), "k"
     )
-    sn.optimize(spark, path)
+    # compact everything: a real rewrite at any partition count
+    opt = sn.optimize(spark, path, target_file_rows=10**6, small_file_rows=10**6)
     sn.append_table(spark, path, _rows(spark, 13, 14), "k")
     latest = sn.current_version(path)
+    opt_v = opt["version"]
+    assert opt_v == latest - 1 and opt["files_rewritten"] > 0
 
     got = _drain(
         spark,
@@ -250,7 +253,6 @@ def test_stream_read_change_feed_matches_batch_cdc(spark, tmp_path):
     ]
     assert sorted(rows) == sorted(expected)
     # the optimize version contributed nothing (pure rewrite cancels)
-    opt_v = latest - 1
     assert not [r for r in rows if r[3] == opt_v]
     # spot-check the classification itself
     by_change = {}
